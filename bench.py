@@ -225,9 +225,9 @@ WARM_MEMOS = [
     "sim_ann_ivf_pq_served",
     "neardup_lookup_served",
     "jsonl_roundtrip_audit",
-    # standing-corpus CC labels (pipeline._CC_STANDING_CACHE): in
-    # production yesterday's stored table — cc_append's timed path is
-    # the absorption, not the standing rebuild
+    # standing-corpus CC labels (pipeline._cc_standing): in production
+    # yesterday's stored table — cc_append's timed path is the
+    # absorption, not the standing rebuild
     "cc_append",
 ]
 
@@ -497,6 +497,7 @@ def main() -> None:
     # reading is pure host, not warm-up (see _canary_bench docstring)
     canary = _canary_bench()
     print(f"# canary: {canary}", file=sys.stderr, flush=True)
+    from elastic_stream_spark import memo
     from elastic_stream_spark.operators import all_queries
     from elastic_stream_spark.functions.materialize import unpersist_materialized
     from elastic_stream_spark.session import get_spark
@@ -517,6 +518,10 @@ def main() -> None:
     for name in WARM_MEMOS:
         _force_count(qs[name](spark, sf_dir))
     print(f"# warmup: {time.time() - t0:.1f}s", file=sys.stderr, flush=True)
+    # session-memo counters per key kind, after warm-up and after the
+    # timed loop: a miss between the two means a timed sample paid for
+    # a memo build
+    memo_stats = {"after_warmup": memo.stats()}
 
     # best-of-2 per query: this host's storage stalls intermittently
     # (seconds-long I/O waits unrelated to the workload); the min of two
@@ -591,6 +596,7 @@ def main() -> None:
             flush=True,
         )
 
+    memo_stats["after_timed"] = memo.stats()
     append = _append_bench(spark)
     print(f"# append: {append}", file=sys.stderr, flush=True)
     bulk = _bulk_throughput_bench(spark)
@@ -642,7 +648,11 @@ def main() -> None:
     }
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:
-        json.dump({**payload, "samples_in_run_order": raw_samples}, f, indent=1)
+        json.dump(
+            {**payload, "samples_in_run_order": raw_samples, "memo": memo_stats},
+            f,
+            indent=1,
+        )
         f.write("\n")
     # r15 VERDICT item 2: the driver's per-query PERF comparison came
     # back empty (n_common: 0) because 112 medians cannot fit the

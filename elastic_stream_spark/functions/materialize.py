@@ -76,11 +76,11 @@ def unpersist_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
     ``localCheckpoint`` truncates lineage, so releasing a checkpoint
     that some other DataFrame still builds on makes that DataFrame
     unrecomputable — its next action fails with a missing-block error
-    rather than a recompute.  The in-repo callers satisfy this by
-    evicting whole cache FAMILIES at once (``evict_checkpoint_caches``
-    below clears the owning memo dicts in the same call); a library
-    consumer releasing a single handle must know nothing else derives
-    from it.  A failed plan walk raises RuntimeError (with however many
+    rather than a recompute.  The session memo (``memo.py``) satisfies
+    this by releasing only the handles it owns, when their input changed
+    or the session's memos are evicted; a library consumer releasing a
+    single handle must know nothing else derives from it.  A failed
+    plan walk raises RuntimeError (with however many
     checkpoints were already released noted) — it is NOT the False of
     "walked fine, found no checkpoint", so partial releases are never
     silently mistaken for no-ops."""
@@ -101,34 +101,6 @@ def unpersist_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
             f"{released} checkpoint(s): {e}"
         ) from e
     return released > 0
-
-
-def evict_checkpoint_caches(*caches: dict, blocking: bool = False) -> int:
-    """Shared memo-eviction protocol (one copy — the per-module
-    ``evict_session_memos`` hooks delegate here): unpersist the
-    checkpointed RDDs behind every cached DataFrame, clear the cache
-    dicts, then ``gc.collect()`` so the ContextCleaner can also reclaim
-    any intermediate checkpoints (CC per-iteration labels, edges) whose
-    only references died with the dropped handles.  Returns how many
-    cache entries had at least one checkpoint released."""
-    import gc
-
-    import warnings
-
-    n = 0
-    for cache in caches:
-        for df in cache.values():
-            try:
-                n += bool(unpersist_local_checkpoint(df, blocking))
-            except RuntimeError as e:
-                # best-effort bulk cleanup: a dead handle (e.g. a memo
-                # from a stopped SparkSession whose stale-purge hasn't
-                # run) must not abort the rest of the family — but it
-                # is surfaced, never silently dropped (r11 ADVICE)
-                warnings.warn(str(e), RuntimeWarning, stacklevel=2)
-        cache.clear()
-    gc.collect()
-    return n
 
 
 def unpersist_materialized(spark: SparkSession, blocking: bool = False) -> int:

@@ -3,7 +3,9 @@
 Each operator module exposes:
 - ``QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]]``
 - ``ORACLES: dict[str, str]``  (DuckDB-runnable ANSI SQL; a key absent here
-  marks the operator non-SQL-expressible → driver does a rows-only check)
+  marks the operator non-SQL-expressible → driver does a rows-only check),
+  or a zero-argument function returning that dict, for a module whose SQL
+  needs imports that must stay lazy
 
 ``all_queries()`` / ``all_oracles()`` merge every module for
 ``__spark_entry__``.
@@ -282,5 +284,5 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def all_oracles() -> dict[str, str]:
     out: dict = {}
     for m in _modules():
-        out.update(m.ORACLES)
+        out.update(m.ORACLES() if callable(m.ORACLES) else m.ORACLES)
     return out

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elastic_stream_spark.memo import memo
 from elastic_stream_spark.sources.envelope import load_table, load_table_balanced
 
 SKEW_TOP = 20  # hottest keys reported
@@ -237,24 +238,22 @@ def winsorized_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# one JSONL export per (application, corpus) — the ingest fixture the
-# round-trip audit reads; same memo discipline as dedup's LSH index
-_JSONL_CACHE: dict[tuple, str] = {}
-
 JSONL_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
 
 
 def _documents_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
+    """One JSONL export of the documents per session and corpus version —
+    the ingest fixture the round-trip audit reads."""
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _JSONL_CACHE:
+    def build() -> str:
         d = tempfile.mkdtemp(prefix="esspark-jsonl-")
         load_table(spark, sf_dir, "documents").write.mode("overwrite").json(d)
-        _JSONL_CACHE[key] = d
-    return _JSONL_CACHE[key]
+        return d
+
+    return memo(spark, sf_dir, ("jsonl_export",), build)
 
 
 def jsonl_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

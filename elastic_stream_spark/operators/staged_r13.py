@@ -81,7 +81,7 @@ QUERIES = {
 QUERIES_R13 = QUERIES  # r12-era alias kept for tests/test_staged_r13.py
 
 
-def _oracles_r13() -> dict[str, str]:
+def ORACLES_R13() -> dict[str, str]:
     from elastic_stream_spark.operators.curation import PACK_BUDGET
 
     return {
@@ -131,17 +131,6 @@ def _oracles_r13() -> dict[str, str]:
     }
 
 
-def ORACLES_R13() -> dict[str, str]:  # callable: curation import stays lazy
-    return _oracles_r13()
-
-
-_ORACLES_CACHE: dict[str, str] | None = None
-
-
-def __getattr__(name: str):  # PEP 562: registry reads m.ORACLES lazily
-    global _ORACLES_CACHE
-    if name == "ORACLES":
-        if _ORACLES_CACHE is None:
-            _ORACLES_CACHE = _oracles_r13()
-        return _ORACLES_CACHE
-    raise AttributeError(name)
+# a function, not a dict: ``all_oracles()`` calls it, so the imports
+# its SQL needs stay lazy
+ORACLES = ORACLES_R13

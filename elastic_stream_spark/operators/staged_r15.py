@@ -161,7 +161,7 @@ QUERIES = {
 QUERIES_R15 = QUERIES
 
 
-def _oracles_r15() -> dict[str, str]:
+def ORACLES_R15() -> dict[str, str]:
     from elastic_stream_spark.operators.curation import CURRICULUM_BUDGET
 
     B = CURRICULUM_BUDGET
@@ -254,17 +254,6 @@ def _oracles_r15() -> dict[str, str]:
     }
 
 
-def ORACLES_R15() -> dict[str, str]:  # callable: curation import stays lazy
-    return _oracles_r15()
-
-
-_ORACLES_CACHE: dict[str, str] | None = None
-
-
-def __getattr__(name: str):  # PEP 562: registry reads m.ORACLES lazily
-    global _ORACLES_CACHE
-    if name == "ORACLES":
-        if _ORACLES_CACHE is None:
-            _ORACLES_CACHE = _oracles_r15()
-        return _ORACLES_CACHE
-    raise AttributeError(name)
+# a function, not a dict: ``all_oracles()`` calls it, so the imports
+# its SQL needs stay lazy
+ORACLES = ORACLES_R15

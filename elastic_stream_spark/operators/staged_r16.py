@@ -131,7 +131,7 @@ QUERIES = {
 QUERIES_R16 = QUERIES
 
 
-def _oracles_r16() -> dict[str, str]:
+def ORACLES_R16() -> dict[str, str]:
     from elastic_stream_spark.operators.curation import EVAL_MOD
     from elastic_stream_spark.operators.dedup import (
         JACCARD_DEN,
@@ -178,17 +178,6 @@ def _oracles_r16() -> dict[str, str]:
     }
 
 
-def ORACLES_R16() -> dict[str, str]:  # callable: imports stay lazy
-    return _oracles_r16()
-
-
-_ORACLES_CACHE: dict[str, str] | None = None
-
-
-def __getattr__(name: str):  # PEP 562: registry reads m.ORACLES lazily
-    global _ORACLES_CACHE
-    if name == "ORACLES":
-        if _ORACLES_CACHE is None:
-            _ORACLES_CACHE = _oracles_r16()
-        return _ORACLES_CACHE
-    raise AttributeError(name)
+# a function, not a dict: ``all_oracles()`` calls it, so the imports
+# its SQL needs stay lazy
+ORACLES = ORACLES_R16

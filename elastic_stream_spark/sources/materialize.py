@@ -3,7 +3,7 @@
 Round-1 served the oracle-checked stream-surface queries straight off the
 derived envelope view, which validated the envelope math but bypassed
 ``StreamCatalog`` / ``StreamLog`` / ``KVStore``.  This module loads the
-fixture INTO a real (temp-dir) engine instance once per process and hands
+fixture INTO a real (temp-dir) engine instance once per session and hands
 the queries the real read paths:
 
 - records land in the partitioned parquet log via ``StreamLog.bulk_load``
@@ -34,6 +34,7 @@ from pyspark.sql import SparkSession
 from elastic_stream_spark.catalog import StreamCatalog
 from elastic_stream_spark.kv import KVStore
 from elastic_stream_spark.log import StreamLog
+from elastic_stream_spark.memo import memo
 from elastic_stream_spark.sources.envelope import RANGE_SIZE, events_envelope
 
 
@@ -46,16 +47,12 @@ class EngineFixture:
     stream_names: dict[int, str]  # stream_id -> event_type
 
 
-_CACHE: dict[str, EngineFixture] = {}
-_TRIM_CACHE: dict[tuple[str, int, int], EngineFixture] = {}
-
-
 def get_engine(spark: SparkSession, sf_dir: str) -> EngineFixture:
-    """The per-process engine instance loaded from ``sf_dir`` (idempotent)."""
-    eng = _CACHE.get(sf_dir)
-    if eng is not None:
-        return eng
+    """The session's engine instance loaded from ``sf_dir`` (memoized)."""
+    return memo(spark, sf_dir, ("engine",), lambda: _build_engine(spark, sf_dir))
 
+
+def _build_engine(spark: SparkSession, sf_dir: str) -> EngineFixture:
     root = tempfile.mkdtemp(prefix="esspark-engine-")
     catalog = StreamCatalog(root)
     log = StreamLog(spark, catalog)
@@ -89,9 +86,7 @@ def get_engine(spark: SparkSession, sf_dir: str) -> EngineFixture:
     for row in nation:
         kv.put(row["n_name"].encode(), str(row["n_nationkey"]).encode())
 
-    eng = EngineFixture(root, catalog, log, kv, stream_names)
-    _CACHE[sf_dir] = eng
-    return eng
+    return EngineFixture(root, catalog, log, kv, stream_names)
 
 
 def trimmed_engine(
@@ -101,11 +96,17 @@ def trimmed_engine(
     trim_at)`` applied.  Record files are shared read-only (vacuum is NOT
     run here — physical reclaim is exercised separately in pytest), so the
     clone costs one small JSON copy regardless of data size."""
-    key = (sf_dir, stream_id, trim_at)
-    eng = _TRIM_CACHE.get(key)
-    if eng is not None:
-        return eng
+    return memo(
+        spark,
+        sf_dir,
+        ("trimmed_engine", stream_id, trim_at),
+        lambda: _trim_engine(spark, sf_dir, stream_id, trim_at),
+    )
 
+
+def _trim_engine(
+    spark: SparkSession, sf_dir: str, stream_id: int, trim_at: int
+) -> EngineFixture:
     base = get_engine(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="esspark-engine-trim-")
     catalog = base.catalog.clone_to(root)
@@ -113,6 +114,4 @@ def trimmed_engine(
     log.records_root = base.log.records_root  # share the immutable data files
     catalog.trim_stream(stream_id, trim_at)
 
-    eng = EngineFixture(root, catalog, log, base.kv, dict(base.stream_names))
-    _TRIM_CACHE[key] = eng
-    return eng
+    return EngineFixture(root, catalog, log, base.kv, dict(base.stream_names))

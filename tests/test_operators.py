@@ -1031,8 +1031,10 @@ def test_ivf_pq_exact_on_twin_fixture(spark):
 
 def test_pair_and_cluster_memos_are_keyed_per_corpus(spark, workdir):
     """The session-lifetime pair-set / cluster-table memos must key on
-    the corpus dir: two different corpora queried in one session get
-    their own materializations, never each other's."""
+    the corpus dir, the session and the corpus version: two different
+    corpora queried in one session get their own materializations, a
+    sibling session never gets another session's handle, and a
+    rewritten table is never served its old result."""
     import os
 
     from elastic_stream_spark.operators.dedup import ngram_pair_set
@@ -1042,12 +1044,15 @@ def test_pair_and_cluster_memos_are_keyed_per_corpus(spark, workdir):
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows1 = [(0, base, "en", "s0", len(base)), (1, base + " x", "en", "s0", len(base) + 2)]
     rows2 = [(0, "totally different words here with no overlap at all", "en", "s0", 51)]
-    for d, rows in ((d1, rows1), (d2, rows2)):
+    def write_docs(d, rows):
         os.makedirs(d, exist_ok=True)
         spark.createDataFrame(
             rows,
             "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
         ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+
+    for d, rows in ((d1, rows1), (d2, rows2)):
+        write_docs(d, rows)
 
     p1 = ngram_pair_set(spark, d1).count()
     p2 = ngram_pair_set(spark, d2).count()
@@ -1057,6 +1062,44 @@ def test_pair_and_cluster_memos_are_keyed_per_corpus(spark, workdir):
     assert ngram_pair_set(spark, d2).count() == 0
     assert dedup_clusters(spark, d1).count() == 2
     assert dedup_clusters(spark, d2).count() == 0
+
+    # a newSession() sibling shares the applicationId but not the
+    # session: it gets its own pair set, and building it leaves the first
+    # session's handle intact
+    h1 = ngram_pair_set(spark, d1)
+    sibling = spark.newSession()
+    h2 = ngram_pair_set(sibling, d1)
+    assert h2 is not h1
+    assert h2.count() == 1
+    assert h1.count() == 1
+    assert ngram_pair_set(spark, d1) is h1
+
+    # rewriting the corpus invalidates the memo: without the near-dup
+    # the pair set is empty
+    write_docs(d1, rows1[:1])
+    assert ngram_pair_set(spark, d1).count() == 0
+
+    # the same for a memoized table row count
+    from elastic_stream_spark.sources.envelope import table_rows
+
+    d3 = f"{workdir}/c3"
+    spark.range(3).write.parquet(f"{d3}/region.parquet")
+    assert table_rows(spark, d3, "region") == 3
+    spark.range(5).write.mode("overwrite").parquet(f"{d3}/region.parquet")
+    assert table_rows(spark, d3, "region") == 5
+
+    # evict() releases the session's memos; the counters see the hits
+    # before it and the rebuild after it
+    from elastic_stream_spark import memo
+
+    before = memo.stats()["pair_set"]
+    h = ngram_pair_set(spark, d1)
+    assert ngram_pair_set(spark, d1) is h
+    assert memo.evict(spark, blocking=True) >= 1
+    assert ngram_pair_set(spark, d1) is not h
+    after = memo.stats()["pair_set"]
+    assert after["hits"] == before["hits"] + 2
+    assert after["misses"] == before["misses"] + 1
 
 
 def test_fused_pq_build_matches_standalone_encode(spark):

@@ -21,8 +21,10 @@ migration / canary work is off-gate), so r14 has no CHANGED re-entries.
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import re
 
 from elastic_stream_spark.operators import GATE_ORDER, all_oracles, all_queries
 
@@ -179,3 +181,32 @@ def test_every_query_has_an_oracle():
     oracles = all_oracles()
     no_oracle = {n for n in qs if n not in oracles}
     assert no_oracle == set()
+
+
+def test_memo_policy_lives_only_in_memo_module():
+    """Reused per-session results go through ``elastic_stream_spark.memo``
+    (one key, one staleness rule, one eviction path).  A module-level
+    ``_*CACHE`` in any other module is a private memo with its own
+    policy, which is how keys that ignored the session and the input
+    version crept in."""
+    import elastic_stream_spark
+
+    pkg = os.path.dirname(elastic_stream_spark.__file__)
+    found = []
+    for root, _, files in os.walk(pkg):
+        for fn in files:
+            path = os.path.join(root, fn)
+            if not fn.endswith(".py") or path == os.path.join(pkg, "memo.py"):
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in tree.body:
+                targets = (
+                    node.targets if isinstance(node, ast.Assign)
+                    else [node.target] if isinstance(node, ast.AnnAssign)
+                    else []
+                )
+                for t in targets:
+                    if isinstance(t, ast.Name) and re.fullmatch(r"_\w*CACHE", t.id):
+                        found.append(f"{os.path.relpath(path, pkg)}:{node.lineno} {t.id}")
+    assert not found, f"module-level caches outside memo.py: {found}"

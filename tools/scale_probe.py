@@ -208,23 +208,21 @@ def main() -> None:
     # inconsistent-baseline artifact behind the recurring
     # dedup_ngram_jaccard decade flag (r9/r10 isolated re-measures in
     # SCALE.extra.md), fixed at the source here.
+    from elastic_stream_spark import memo
     from elastic_stream_spark.functions.materialize import (
         unpersist_materialized,
     )
-    from elastic_stream_spark.operators import dedup as _dedup
-    from elastic_stream_spark.operators import pipeline as _pipeline
 
-    def _evict_session_memos():
-        # public hooks (r10 ADVICE): clear the memo dicts AND unpersist
-        # their localCheckpoint blocks, so runs 2..n neither serve a memo
-        # nor inherit its pinned storage.  BLOCKING unpersists: async
-        # removal of the 160×-leg multi-GB checkpoint blocks otherwise
-        # overlaps — and taxes — the next timed run (the r11 first-pass
-        # decade leg measured 127 s vs 92 s for exactly this reason)
+    def _evict_memos():
+        # drop the session memos AND unpersist their localCheckpoint
+        # blocks, so runs 2..n neither serve a memo nor inherit its
+        # pinned storage.  BLOCKING unpersists: async removal of the
+        # 160×-leg multi-GB checkpoint blocks otherwise overlaps — and
+        # taxes — the next timed run (the r11 first-pass decade leg
+        # measured 127 s vs 92 s for exactly this reason)
         spark.catalog.clearCache()
         unpersist_materialized(spark, blocking=True)
-        _dedup.evict_session_memos(blocking=True)
-        _pipeline.evict_session_memos(blocking=True)
+        memo.evict(spark, blocking=True)
 
     amp_dirs = [build_amp_dir(spark, base, f, amp_root) for f in AMP_FACTORS]
     amp_results: dict[str, list[float]] = {name: [] for name in AMP_PROBE}
@@ -234,7 +232,7 @@ def main() -> None:
             fn = qs[name]
             best = None
             for _ in range(3):
-                _evict_session_memos()
+                _evict_memos()
                 t0 = time.time()
                 fn(spark, d).count()
                 dt = time.time() - t0
@@ -252,7 +250,7 @@ def main() -> None:
         fn = qs[name]
         best = None
         for _ in range(2):
-            _evict_session_memos()
+            _evict_memos()
             t0 = time.time()
             fn(spark, d160).count()
             dt = time.time() - t0
