@@ -23,9 +23,14 @@ Semantics mapped Spark-first:
   old epoch is fenced on its next append (``FencedError`` ≙
   EXPIRED_RANGE_EPOCH, rpc.fbs:48-51).
 - ``append`` takes a DataFrame batch (ts/properties/payload) — the
-  Spark-native record batch — or a plain list of payload bytes, and
-  returns ``AppendResult.base_offset`` (append_result.rs:1-10).
-- ``read`` returns the records DataFrame (offset-ordered, pruned scan);
+  Spark-native record batch, written by a Spark job — or a plain list of
+  payload bytes, which is already in driver memory and is written on the
+  driver as one parquet file with no Spark job (the low-latency path:
+  reserve → write + rename → confirm).  Either way it returns
+  ``AppendResult.base_offset`` (append_result.rs:1-10).
+- ``read`` returns the records DataFrame (offset-ordered scan that lists
+  only this stream's directory, so its planning cost follows the stream's
+  own file count, not the number of streams);
   ``read_payloads`` collects the raw payload bytes like the reference's
   ``Vec<Bytes>`` return — driver-side, for small windows only.
 """
@@ -82,21 +87,13 @@ class Stream:
 
     def append(self, batch, ts_ms: int = 0) -> AppendResult:
         """≙ stream.rs:39-77.  ``batch`` is a DataFrame with ``ts`` (+
-        optional properties/payload) or a list of payload ``bytes`` (each
-        element one record, stamped with ``ts_ms``).  Fenced with this
-        handle's epoch: a newer ``open`` invalidates it."""
+        optional properties/payload), written by a Spark job, or a list of
+        payload ``bytes`` (each element one record, stamped with
+        ``ts_ms``), written on the driver with no Spark job (see
+        ``StreamLog.append``).  Fenced with this handle's epoch: a newer
+        ``open`` invalidates it, and a fenced append writes nothing."""
         self._check_open()
-        if not isinstance(batch, DataFrame):
-            from pyspark.sql import functions as F
-
-            batch = (
-                self._f.spark.createDataFrame(
-                    [(bytes(p),) for p in batch], "payload BINARY"
-                )
-                .withColumn("ts", F.timestamp_millis(F.lit(ts_ms)))
-                .select("ts", "payload")
-            )
-        base, end = self._f.log.append(self.id, batch, epoch=self.epoch)
+        base, end = self._f.log.append(self.id, batch, epoch=self.epoch, ts_ms=ts_ms)
         return AppendResult(base, end)
 
     # -------------------------------------------------------------- read
@@ -152,7 +149,9 @@ class Stream:
 
     def close(self) -> None:
         """≙ stream.rs:116-121 — releases the handle (metadata-only here:
-        writes are per-batch jobs, nothing buffered)."""
+        every append is durable and confirmed when it returns — a Spark
+        job for a DataFrame, a driver-side file write for a list — so
+        nothing is buffered)."""
         self._closed = True
 
     def _check_open(self) -> None:

@@ -23,9 +23,14 @@ matching the reference's claim that throughput is flat in stream count).
 from __future__ import annotations
 
 import fcntl
+import json
 import os
-from contextlib import contextmanager
+import uuid
+from contextlib import contextmanager, suppress
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pyspark
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,12 +51,45 @@ RECORD_SCHEMA = T.StructType(
 
 PAYLOAD_COLS = ["ts", "properties", "payload"]
 
+# What a range file holds (the partition columns live in its path), in
+# Spark's types and in Arrow's.  A driver-written list append must read
+# like a Spark-written file: the same physical parquet schema (required
+# int64 offset, required INT96 ts, optional MAP<string,string>, optional
+# binary), snappy, and the footer keys Spark writes — the row metadata is
+# the JVM's field order, no sort_keys, so it is byte-identical.  pyarrow
+# also stores its ``ARROW:schema`` key (it writes no key-value metadata
+# without it); Spark ignores that key, and with ``ts`` as timestamp[ns]
+# pyarrow reads both kinds of file with the same Arrow schema.
+_FILE_SCHEMA = T.StructType(
+    [f for f in RECORD_SCHEMA.fields if f.name not in ("stream_id", "range_index")]
+)
+_ARROW_FILE_SCHEMA = pa.schema(
+    [
+        pa.field("offset", pa.int64(), nullable=False),
+        pa.field("ts", pa.timestamp("ns"), nullable=False),
+        pa.field("properties", pa.map_(pa.string(), pa.string())),
+        pa.field("payload", pa.binary()),
+    ],
+    metadata={
+        "org.apache.spark.version": pyspark.__version__,
+        "org.apache.spark.sql.parquet.row.metadata": json.dumps(
+            _FILE_SCHEMA.jsonValue(), separators=(",", ":")
+        ),
+    },
+)
+
 
 class StreamLog:
     """Append/fetch over the partitioned record log.
 
     One instance per catalog root; all methods are driver-side plan builders
-    except ``append`` which executes a write job.
+    except ``append``.  ``append`` of a DataFrame runs two Spark jobs
+    (count, write); ``append`` of a ``list[bytes]`` runs none — the
+    payloads are already in driver memory, so the range file is written
+    on the driver with pyarrow and made visible by one rename.  Reads of
+    one stream (``fetch``, the recovery probes, retention) list only that
+    stream's directory, so their planning cost does not grow with the
+    number of streams in the log.
     """
 
     def __init__(self, spark: SparkSession, catalog: StreamCatalog):
@@ -65,33 +103,91 @@ class StreamLog:
     # ----------------------------------------------------------- append
 
     def append(
-        self, stream_id: int, batch: DataFrame, epoch: int | None = None
+        self,
+        stream_id: int,
+        batch: DataFrame | list[bytes],
+        epoch: int | None = None,
+        ts_ms: int = 0,
     ) -> tuple[int, int]:
         """Append a batch to the stream's mutable range; returns
         ``(base_offset, last_offset_exclusive)``.
 
         Offset assignment (SURVEY.md §7 hard-part 1): the catalog reserves a
         contiguous block under its lock (≙ the reference's write-window
-        serialization, window.rs:7-45), then offsets are stamped
-        ``base + row_number() - 1`` inside the job.  The per-stream
-        ``Window.orderBy`` is a single-partition sort *per stream per
-        batch* — exactly the reference's one-mutable-range-per-stream rule;
-        cross-stream appends parallelize freely.
+        serialization, window.rs:7-45), the block's file is written, then
+        the confirm offset advances past it — in that order on both paths,
+        so readers gated on the confirm offset never admit a block whose
+        file has not landed.
 
-        ``batch`` needs columns ``ts``; optional ``properties``, ``payload``.
+        ``batch`` is either a DataFrame with column ``ts`` (optional
+        ``properties``, ``payload``), stamped ``base + row_number() - 1``
+        in ``ts`` order inside a Spark write job (``write_stamped``), or a
+        list of payload bytes, each one record with timestamp ``ts_ms``,
+        stamped ``base + i`` in list order and written on the driver
+        (``_write_payloads``) without any Spark job.
         """
-        batch = self.prepare_batch(batch)
-        n = batch.count()
+        if isinstance(batch, DataFrame):
+            batch = self.prepare_batch(batch)
+            n = batch.count()
+        else:
+            batch = [bytes(p) for p in batch]
+            n = len(batch)
         if n == 0:
             meta = self.catalog.describe_stream(stream_id)
             return meta.next_offset, meta.next_offset
         base, rng = self.catalog.reserve_offsets(stream_id, n, epoch=epoch)
-        self.write_stamped(stream_id, batch, base, rng.range_index)
-        # the write job completed → advance the durable confirm offset
+        if isinstance(batch, DataFrame):
+            self.write_stamped(stream_id, batch, base, rng.range_index)
+        else:
+            self._write_payloads(stream_id, batch, ts_ms, base, rng.range_index)
+        # the write completed → advance the durable confirm offset
         # (readers admit up to confirmed, never the reserve-time
         # next_offset — see StreamCatalog.confirm_offset)
         self.catalog.confirm_offset(stream_id, base + n)
         return base, base + n
+
+    def _write_payloads(
+        self, stream_id: int, payloads: list[bytes], ts_ms: int, base: int, range_index: int
+    ) -> None:
+        """Write one range file for a list append, on the driver.  The
+        file is written and fsynced under a dot-prefixed temp name (every
+        reader — Spark, pyarrow datasets, ``parquet_files`` — skips
+        dot-files), then renamed to a Spark-style ``part-*`` name: a crash
+        leaves either no visible file or the whole file, never a torn one."""
+        n = len(payloads)
+        table = pa.table(
+            [
+                pa.array(range(base, base + n), pa.int64()),
+                pa.array([ts_ms * 1_000_000] * n, pa.timestamp("ns")),
+                pa.nulls(n, pa.map_(pa.string(), pa.string())),
+                pa.array(payloads, pa.binary()),
+            ],
+            schema=_ARROW_FILE_SCHEMA,
+        )
+        d = self._range_dir(stream_id, range_index)
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4()}-c000.snappy.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        try:
+            with open(tmp, "wb") as f:
+                # stats on ``offset`` only: the fetch pushdown, the
+                # stream_log source and delete_offset_span read no other
+                # column's, and min/max of 1 KiB payloads would make a
+                # small append's file ~30 % larger
+                pq.write_table(
+                    table,
+                    f,
+                    compression="snappy",
+                    use_deprecated_int96_timestamps=True,
+                    write_statistics=["offset"],
+                )
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, os.path.join(d, name))  # the visibility point
+        except BaseException:
+            with suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
 
     def prepare_batch(self, batch: DataFrame) -> DataFrame:
         """Normalize an input batch to the payload columns and truncate its
@@ -105,7 +201,9 @@ class StreamLog:
         job, instead of the eager-checkpoint + count double job — the
         append path is two jobs total (materialize-count, write), which is
         what keeps per-append overhead low enough for aggregate throughput
-        to scale with stream count (docs/benchmark.md:27-32)."""
+        to scale with stream count (docs/benchmark.md:27-32).  That holds
+        for DataFrame batches only; a ``list[bytes]`` append never comes
+        here and runs no Spark job at all (see ``append``)."""
         missing = {"ts"} - set(batch.columns)
         if missing:
             raise ValueError(f"append batch missing columns: {missing}")
@@ -164,8 +262,8 @@ class StreamLog:
         the log — the reconcile probe for crash-recovery (partition-pruned
         point read)."""
         return (
-            self.records()
-            .where((F.col("stream_id") == stream_id) & (F.col("offset") == offset))
+            self._stream_records(stream_id)
+            .where(F.col("offset") == offset)
             .limit(1)
             .count()
             > 0
@@ -178,12 +276,8 @@ class StreamLog:
         exactly ``end - base``; a torn (mid-job-commit) write counts
         something in between."""
         return (
-            self.records()
-            .where(
-                (F.col("stream_id") == stream_id)
-                & (F.col("offset") >= base)
-                & (F.col("offset") < end)
-            )
+            self._stream_records(stream_id)
+            .where((F.col("offset") >= base) & (F.col("offset") < end))
             .count()
         )
 
@@ -193,8 +287,9 @@ class StreamLog:
         block.  Offsets in a reserved block belong to exactly one append
         attempt, so any overlapping file is a partial product of that
         attempt.  A file without stats is conservatively deleted only if
-        the whole range is being replayed (never happens with our writer —
-        Spark always writes offset stats).  Returns files removed."""
+        the whole range is being replayed (never happens with our writers —
+        Spark and the driver-side list write both write offset stats).
+        Returns files removed."""
         from elastic_stream_spark.objects import file_offset_span, parquet_files
 
         removed: list[str] = []
@@ -250,11 +345,33 @@ class StreamLog:
             .parquet(self.records_root)
         )
 
+    def _stream_records(self, stream_id: int) -> DataFrame:
+        """One stream's records, RECORD_SCHEMA-typed like ``records()``.
+        The read's root is the stream's directory (``basePath`` stays the
+        log root, so ``stream_id``/``range_index`` are still partition
+        columns): planning lists this stream's files only, not every
+        stream's.  The ``stream_id`` predicate is kept so the plan still
+        shows the partition filter."""
+        stream_dir = f"{self.records_root}/stream_id={stream_id}"
+        if not os.path.isdir(stream_dir):
+            # the column order a parquet read gives: partition columns last
+            return self.spark.createDataFrame([], RECORD_SCHEMA).select(
+                *_FILE_SCHEMA.names, "stream_id", "range_index"
+            )
+        return (
+            self.spark.read.option("basePath", self.records_root)
+            .schema(RECORD_SCHEMA)
+            .parquet(stream_dir)
+            .where(F.col("stream_id") == stream_id)
+        )
+
     def fetch(self, stream_id: int, start_offset: int, end_offset: int) -> DataFrame:
         """FETCH ≙ read ``[start_offset, end_offset)`` in offset order.
 
-        The stream_id predicate prunes partitions (directory level); the
-        offset predicates push down to parquet row-group stats — the same
+        The read lists only the stream's directory (``_stream_records``),
+        so planning is O(this stream's files), flat in the number of
+        streams; the offset predicates push down to parquet row-group
+        stats — the same
         IO-skipping role as the reference's sparse index
         (components/model/src/object.rs:31-97).  Reads below the trim
         horizon return nothing (≙ OffsetOutOfRange after TRIM_STREAM).
@@ -262,12 +379,8 @@ class StreamLog:
         meta = self.catalog.describe_stream(stream_id)
         lo = max(start_offset, meta.start_offset)
         return (
-            self.records()
-            .where(
-                (F.col("stream_id") == stream_id)
-                & (F.col("offset") >= lo)
-                & (F.col("offset") < end_offset)
-            )
+            self._stream_records(stream_id)
+            .where((F.col("offset") >= lo) & (F.col("offset") < end_offset))
             .orderBy("offset")
         )
 
@@ -534,8 +647,8 @@ class StreamLog:
             return meta.start_offset
         horizon = F.timestamp_millis(F.lit(now_ms - meta.retention_ms))
         row = (
-            self.records()
-            .where((F.col("stream_id") == stream_id) & (F.col("ts") >= horizon))
+            self._stream_records(stream_id)
+            .where(F.col("ts") >= horizon)
             .agg(F.min("offset").alias("first_live"))
             .collect()[0]
         )
